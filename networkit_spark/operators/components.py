@@ -15,9 +15,11 @@ node id, ConnectedComponentsImpl.cpp:36-37), so `compact_labels` aligns
 with the reference's ids under canonical relabeling
 (ConnectedComponentsGTest.cpp:85-105 equivalence contract).
 
-Spark plan per superstep (converges in O(diameter) supersteps):
+Spark plan per superstep (converges in O(log diameter) supersteps on
+chains, thanks to the pointer-doubling hop):
     msgs = changed-labels ⋈ sym_edges on src      [shuffle join]
     new  = (labels ∪ msgs) groupBy(id).min(label)  [partial+final min-agg]
+    new  = min(new, new[new])                      [pointer doubling self-join]
 Active-set optimization: labels only ever DECREASE, so only nodes whose
 label changed last superstep need to re-broadcast it (mirrors the
 reference's activeNodes bookkeeping, :52-59). Late supersteps touch a tiny
@@ -25,7 +27,7 @@ frontier — the frontier side of the join is broadcast-able and AQE picks
 that up automatically once it's under the broadcast threshold.
 
 Scale note: at web scale (10^12 edges, diameter ~ hundreds via long
-chains) plain hash-min's superstep count is bounded by graph diameter;
+chains) hash-min's superstep count still grows with graph diameter;
 `connected_components_twophase` below implements the standard fix —
 alternating large-star/small-star contraction (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14), O(log² n)
@@ -78,7 +80,6 @@ def connected_components(
     resume: bool = False,
     max_iterations: int | None = None,
     initial_labels: DataFrame | None = None,
-    shortcut: bool = True,
     coarsen_after: int | None = None,
 ) -> ComponentsResult:
     """initial_labels (id, label): warm start — valid whenever every given
@@ -86,8 +87,8 @@ def connected_components(
     point of a previous run on a subgraph, used by streaming incremental
     CC); hash-min converges to the same fixed point from any such seed.
 
-    shortcut=True adds pointer-doubling per superstep (label ←
-    min(label, label[label]) — one extra self-join): supersteps drop from
+    Every superstep adds pointer doubling (label ← min(label,
+    label[label]) — one extra self-join): supersteps drop from
     O(diameter) to O(log diameter) on chain-heavy graphs, the standard
     large-star/small-star-class optimization (Kiveris et al., SoCC'14);
     the fixed point (min id per component) is unchanged because the
@@ -105,7 +106,8 @@ def connected_components(
     High-diameter tails then iterate on the contracted remnant instead
     of dragging the full edge table through every superstep. Checkpoint
     `resume` covers the supersteps before the contraction; the recursive
-    levels rerun from their (cheap, already-contracted) seeds."""
+    levels rerun from their (cheap, already-contracted) seeds.
+    max_iterations caps the supersteps summed over all levels."""
     spark = graph.edges.sparkSession
     ckpt = checkpointer or Checkpointer(spark, None, algorithm="connected_components")
     sym = graph.symmetrized_edges().select("src", "dst")
@@ -147,20 +149,19 @@ def connected_components(
             .groupBy("id")
             .agg(F.min("label").alias("new_label"))
         )
-        if shortcut:
-            # pointer doubling: follow one more hop through the label table
-            hop = new.select(
-                F.col("id").alias("label_id"), F.col("new_label").alias("hop_label")
+        # pointer doubling: follow one more hop through the label table
+        hop = new.select(
+            F.col("id").alias("label_id"), F.col("new_label").alias("hop_label")
+        )
+        new = (
+            new.join(hop, new.new_label == hop.label_id, "left")
+            .select(
+                "id",
+                F.least(
+                    F.col("new_label"), F.coalesce("hop_label", F.col("new_label"))
+                ).alias("new_label"),
             )
-            new = (
-                new.join(hop, new.new_label == hop.label_id, "left")
-                .select(
-                    "id",
-                    F.least(
-                        F.col("new_label"), F.coalesce("hop_label", F.col("new_label"))
-                    ).alias("new_label"),
-                )
-            )
+        )
         merged = (
             state.select("id", F.col("label").alias("old_label"))
             .join(new, "id")
@@ -197,10 +198,10 @@ def connected_components(
         )
         sub = connected_components(
             coarse,
-            shortcut=shortcut,
             # guard: recurse with coarsening only while the graph shrinks
             coarsen_after=coarsen_after if coarse_n < n_fine else None,
-            max_iterations=max_iterations,
+            max_iterations=(None if max_iterations is None
+                            else max(0, max_iterations - iterations)),
         )
         roots = sub.labels.select(
             F.col("id").alias("label"), F.col("label").alias("root")

@@ -234,13 +234,7 @@ def _move_phase(
     moves_history: list[int] = []
     idle_sweeps = 0
     sweep = 0
-    import os as _os
-    import time as _time
-    _dbg = _os.environ.get("PLM_DEBUG_SWEEPS")
     while sweep < max_iter and idle_sweeps < 1:
-        _t0 = _time.perf_counter()
-        if _dbg:
-            spark.sparkContext.setJobGroup(f"plm-sweep-{sweep}", "")
         # affinity(u→C): weight from u to each neighboring community.
         # The self row marks u's own community's group (own=true) and
         # contributes 0 weight, so aff_c needs no coalesce and c/vol_cc
@@ -329,8 +323,6 @@ def _move_phase(
             F.coalesce("gate", F.lit(False)).alias("moved"),
             F.col("new_label").isNotNull().alias("improvable"),
         )
-        if _dbg and sweep == 0 and _os.environ.get("PLM_EXPLAIN"):
-            merged.explain("formatted")
         # Inline truncate: the checkpoint is LAZY, so the convergence-
         # counter aggregation below is the one job that computes the
         # sweep, truncates lineage, and populates the cache. (A plain
@@ -347,18 +339,6 @@ def _move_phase(
         n_moved, n_improvable = int(counts["nm"]), int(counts["ni"])
         state = merged.select("id", "label", "vol")
         moves_history.append(n_moved)
-        if _dbg:
-            tracker = spark.sparkContext.statusTracker()
-            jobs = tracker.getJobIdsForGroup(f"plm-sweep-{sweep}")
-            n_stages = sum(
-                len(tracker.getJobInfo(j).stageIds) for j in jobs
-            )
-            print(
-                f"    sweep {sweep}: {_time.perf_counter() - _t0:.2f}s"
-                f" moved={n_moved} jobs={len(jobs)} stages={n_stages}",
-                flush=True,
-            )
-            spark.sparkContext.setJobGroup("", "")
         if n_moved > 0:
             change = True
         if n_improvable > 0:

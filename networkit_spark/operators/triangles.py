@@ -1,4 +1,5 @@
-"""Triangle counting and clustering coefficients via degree-ordered joins.
+"""Triangle counting and clustering coefficients via degree-ordered,
+color-partitioned enumeration.
 
 Reference semantics:
 - ClusteringCoefficient::exactGlobal (networkit/cpp/global/
@@ -14,29 +15,20 @@ Reference semantics:
 - Undirected simple graphs only (no self-loops: LCC ctor throws,
   LocalClusteringCoefficient.cpp:8-13; multi-edges are collapsed first).
 
-Spark plans (both use the same degree orientation, so enumeration work is
-bounded by Σ_v C(out(v),2) ≈ m^1.5 — the reference turbo-mode trick; no
-hub blow-up on power-law graphs):
-
-- DEFAULT `method="partition"`: hash-space color-triple partitioning —
-  one p·m-row edge shuffle into C(p+2,3) subproblems, then wedge
-  generation AND closure run partition-locally in numpy inside
-  `groupBy().applyInPandas`; no wedge row ever crosses the network.
-  Banner above `_replicated_edges` has the full scheme.
-- `method="join"` (A/B escape hatch): the classic two-join enumeration
-  (wedge self-join on the shared tail + left-semi closure); its closure
-  join shuffles the wedge set itself — 35 GiB at RMAT 2^21
-  (BENCH_r4_10x.json), which is what the partitioned plan eliminates.
+Spark plan (degree orientation bounds enumeration work by
+Σ_v C(out(v),2) ≈ m^1.5 — the reference turbo-mode trick; no hub blow-up
+on power-law graphs): hash-space color-triple partitioning — one
+p·m-row edge shuffle into C(p+2,3) subproblems, then wedge generation
+AND closure run partition-locally in numpy inside
+`groupBy().applyInPandas`; no wedge row ever crosses the network.
+Banner above `_replicated_edges` has the full scheme.
 """
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from networkit_spark.graph import Graph
 
@@ -73,34 +65,6 @@ def _oriented_edges(graph: Graph) -> tuple[DataFrame, DataFrame]:
     return ordered, deg
 
 
-def _triangles_join(graph: Graph) -> DataFrame:
-    """Join-based enumeration (the pre-r5 plan, kept for A/B and as an
-    explicit `method="join"` escape hatch).
-
-    Wedges are pairs of OUT-neighbors of the orientation-minimal vertex
-    (o1 ⋈ o2 on the shared tail — a self-join on one reused hash(lo)
-    exchange), so the wedge volume is Σ_v C(out(v), 2), the bound the
-    degree orientation exists to guarantee (out(v) = #higher-ordered
-    neighbors, small even for hubs). The previous a→b→c path formulation
-    joined on the wedge's MIDDLE vertex, whose volume is Σ_b in(b)·out(b)
-    — in(hub) ≈ deg(hub) on power-law graphs, which blew the wedge
-    shuffle past 60 GiB on a 131M-arc RMAT where this form stays
-    pair-bounded. Closure is one left-semi join against the id-ordered
-    edge set. The residual scale problem: the WEDGE ROWS THEMSELVES are
-    shuffled by the closure join (35 GiB at RMAT 2^21 — BENCH_r4_10x),
-    which is why `method="partition"` is the default."""
-    ordered, _ = _oriented_edges(graph)
-    ordered = ordered.persist(StorageLevel.MEMORY_AND_DISK)
-    o1 = ordered.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-    o2 = ordered.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
-    wedges = o1.join(o2, "a").filter(F.col("b") < F.col("c"))
-    closing = ordered.select(
-        F.least("lo", "hi").alias("b"), F.greatest("lo", "hi").alias("c")
-    )
-    tri = wedges.join(closing, ["b", "c"], "left_semi").select("a", "b", "c")
-    return tri
-
-
 # ------------------------------------------------- partitioned closure
 #
 # Hash-space (color-triple) triangle partitioning: color every vertex
@@ -116,7 +80,8 @@ def _triangles_join(graph: Graph) -> DataFrame:
 # triangles: each triangle found exactly once globally.
 #
 # Why: shuffle volume becomes p·m replicated EDGES instead of the wedge
-# count.  At RMAT 2^21 the join plan shuffled 35 GiB of wedges
+# count.  At RMAT 2^21 a two-join plan (wedge self-join on the shared
+# tail, then a closure join) shuffled 35 GiB of wedges
 # (BENCH_r4_10x.json); p=6 replication of the ~17M oriented edges is
 # ~0.5 GiB.  Per-subproblem edge count concentrates around 6m/p², so p
 # is the memory lever at 100 TB: pick p with 6m/p² × ~32B within
@@ -128,11 +93,8 @@ _TRI_CHUNK_PAIRS = 1 << 23  # wedge pairs materialized per numpy chunk
 
 
 def _tri_default_p(spark) -> int:
-    """Smallest p giving >= defaultParallelism subproblems (C(p+2,3)),
-    clamped to [3, 16]; NKS_TRI_P overrides."""
-    env = os.environ.get("NKS_TRI_P")
-    if env:
-        return max(3, int(env))
+    """Smallest p giving >= 2 × defaultParallelism subproblems
+    (C(p+2,3)), clamped to [3, 16]."""
     par = spark.sparkContext.defaultParallelism
     p = 3
     while (p + 2) * (p + 1) * p // 6 < 2 * par and p < 16:
@@ -227,7 +189,8 @@ def _local_triangle_chunks(pdf: pd.DataFrame, triple, want_sides: bool = False):
     col[l] = c_lo
     col[h] = c_hi
     # membership structure: sorted packed {min,max} local-id pair keys,
-    # fronted by a one-shot hash table of bools (~8 bits per edge, ≤8 MiB)
+    # fronted by a one-shot hash table of one bool byte per slot, 8-16
+    # slots per edge (so 8-16 B per edge; ≤64 MiB at table_bits ≤ 26)
     # — the closure probe is THE kernel hotspot (measured 71% of wall as
     # pure searchsorted: log2(m_sub) DRAM-missing loads per wedge), and
     # the prefilter turns ~88% of probes into a single load, leaving the
@@ -394,50 +357,27 @@ def _partitioned(graph: Graph, kernel, schema: str, p: int | None) -> DataFrame:
     return rep.groupBy("t1", "t2", "t3").applyInPandas(kernel, schema)
 
 
-def _resolve_method(method: str | None) -> str:
-    if method is None:
-        method = os.environ.get("NKS_TRI_METHOD", "partition")
-    if method not in ("partition", "join"):
-        raise ValueError(f"unknown triangle method {method!r}")
-    return method
-
-
-def triangles(graph: Graph, method: str | None = None,
-              p: int | None = None) -> DataFrame:
+def triangles(graph: Graph, p: int | None = None) -> DataFrame:
     """All triangles, once each, as (a, b, c): a is the triangle's
     orientation-minimal vertex ((degree, id) order), b < c by id.
 
-    Default plan is the partition-local color-triple closure (see module
-    banner above `_replicated_edges`): one p·m-row shuffle, then each
-    subproblem enumerates its wedges and closure in numpy with zero
-    further exchange.  `method="join"` (or NKS_TRI_METHOD=join) selects
-    the distributed two-join plan whose closure shuffles the wedge set
-    itself — label-identical output, kept for A/B."""
-    if _resolve_method(method) == "join":
-        return _triangles_join(graph)
+    Partition-local color-triple closure (see module banner above
+    `_replicated_edges`): one p·m-row shuffle, then each subproblem
+    enumerates its wedges and closure in numpy with zero further
+    exchange. p defaults to `_tri_default_p`."""
     return _partitioned(graph, _tri_kernel, "a long, b long, c long", p)
 
 
-def triangle_counts(graph: Graph, method: str | None = None,
-                    p: int | None = None) -> DataFrame:
+def triangle_counts(graph: Graph, p: int | None = None) -> DataFrame:
     """(id, triangles) — triangles incident to each vertex, each counted ONCE
     (reference tr(u) = 2 × this; every vertex present, 0 if none).
 
-    Partitioned path: each subproblem emits per-vertex PARTIAL counts
-    (bincount over its canonical triangles' corners, ≤ its local vertex
-    count in rows) — the global agg shuffles vertex-bounded partials,
-    never per-triangle rows."""
-    if _resolve_method(method) == "join":
-        tri = _triangles_join(graph)
-        corners = (
-            tri.select(F.col("a").alias("id"))
-            .unionByName(tri.select(F.col("b").alias("id")))
-            .unionByName(tri.select(F.col("c").alias("id")))
-        )
-        cnt = corners.groupBy("id").agg(F.count("*").alias("triangles"))
-    else:
-        partial = _partitioned(graph, _corner_kernel, "id long, cnt long", p)
-        cnt = partial.groupBy("id").agg(F.sum("cnt").alias("triangles"))
+    Each subproblem emits per-vertex PARTIAL counts (bincount over its
+    canonical triangles' corners, ≤ its local vertex count in rows) — the
+    global agg shuffles vertex-bounded partials, never per-triangle
+    rows."""
+    partial = _partitioned(graph, _corner_kernel, "id long, cnt long", p)
+    cnt = partial.groupBy("id").agg(F.sum("cnt").alias("triangles"))
     return (
         graph.vertices()
         .join(cnt, "id", "left")
@@ -445,13 +385,10 @@ def triangle_counts(graph: Graph, method: str | None = None,
     )
 
 
-def total_triangles(graph: Graph, method: str | None = None,
-                    p: int | None = None) -> int:
-    """Total number of distinct triangles in the graph.  Partitioned
-    path reduces ONE long per subproblem — no per-triangle rows cross
-    the Python/JVM boundary at all."""
-    if _resolve_method(method) == "join":
-        return _triangles_join(graph).count()
+def total_triangles(graph: Graph, p: int | None = None) -> int:
+    """Total number of distinct triangles in the graph. Reduces ONE long
+    per subproblem — no per-triangle rows cross the Python/JVM boundary
+    at all."""
     part = _partitioned(graph, _total_kernel, "cnt long", p)
     return int(part.agg(F.sum("cnt")).first()[0] or 0)
 
@@ -468,26 +405,16 @@ def global_clustering_coefficient(graph: Graph) -> float:
     return num / den
 
 
-def triangle_edge_scores(graph: Graph, method: str | None = None,
-                         p: int | None = None) -> DataFrame:
+def triangle_edge_scores(graph: Graph, p: int | None = None) -> DataFrame:
     """(u, v, triangles) — triangles containing each simple undirected
     edge {u,v} (u < v). Reference: TriangleEdgeScore
     (networkit/cpp/edgescores/TriangleEdgeScore.cpp:18-120); same
     degree-ordered enumeration, scores scattered back to the three edges
     of each triangle. Every edge present, 0 when in no triangle.
-    Partitioned path emits per-EDGE partial counts (edge-bounded, never
+    Subproblems emit per-EDGE partial counts (edge-bounded, never
     per-triangle rows)."""
-    if _resolve_method(method) == "join":
-        tri = _triangles_join(graph)
-        sides = (
-            tri.select(F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v"))
-            .unionByName(tri.select(F.least("b", "c").alias("u"), F.greatest("b", "c").alias("v")))
-            .unionByName(tri.select(F.least("a", "c").alias("u"), F.greatest("a", "c").alias("v")))
-        )
-        cnt = sides.groupBy("u", "v").agg(F.count("*").alias("triangles"))
-    else:
-        partial = _partitioned(graph, _edge_kernel, "u long, v long, cnt long", p)
-        cnt = partial.groupBy("u", "v").agg(F.sum("cnt").alias("triangles"))
+    partial = _partitioned(graph, _edge_kernel, "u long, v long, cnt long", p)
+    cnt = partial.groupBy("u", "v").agg(F.sum("cnt").alias("triangles"))
     return (
         graph.simple_undirected_edges()
         .join(cnt, ["u", "v"], "left")

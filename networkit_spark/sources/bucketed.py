@@ -34,15 +34,15 @@ def write_edges_bucketed(
     n_buckets: int,
     path: str | None = None,
     mode: str = "overwrite",
-    sort: bool = True,
 ) -> None:
     """Persist (src, dst[, weight]) hash-bucketed by src as a catalog
-    parquet table. sort=True additionally sorts each bucket file by src
-    (CSR-like run locality for in-kernel adjacency builds — free at
-    write time, the rows are already clustered)."""
-    writer = edges.write.format("parquet").mode(mode).bucketBy(n_buckets, "src")
-    if sort:
-        writer = writer.sortBy("src")
+    parquet table, each bucket file sorted by src (CSR-like run locality
+    for in-kernel adjacency builds — free at write time, the rows are
+    already clustered)."""
+    writer = (
+        edges.write.format("parquet").mode(mode)
+        .bucketBy(n_buckets, "src").sortBy("src")
+    )
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table)

@@ -178,10 +178,7 @@ def test_twophase_directed_and_isolated(spark):
 def test_coarsen_after_matches_plain(spark):
     """coarsen_after (ParallelConnectedComponents.cpp:65-76 analog) must
     reach the same min-id fixed point as the plain loop — on the fixture,
-    an ER graph, and a chain that actually triggers ≥1 contraction.
-    (Pointer doubling stays ON: on path graphs hash-min labels without
-    doubling are all-distinct shifts, so contraction barely shrinks —
-    coarsening composes with the shortcut, it doesn't replace it.)"""
+    an ER graph, and a chain that actually triggers ≥1 contraction."""
     g = Graph.from_pairs(spark, F1_EDGES, directed=False, n=F1_N)
     oracle = components_oracle(F1_N, F1_EDGES)
     res = connected_components(g, coarsen_after=2)
@@ -202,3 +199,20 @@ def test_coarsen_after_matches_plain(spark):
     labels = {r["id"]: r["label"] for r in res.labels.collect()}
     assert set(labels.values()) == {0}
     assert any("coarsened_to" in h for h in res.history), res.history
+
+
+def test_coarsen_after_respects_max_iterations(spark):
+    """max_iterations caps the supersteps summed over every coarsening
+    level: on P_65 the contracted levels must stop at the remaining
+    budget instead of iterating on with the full cap each."""
+    n = 65
+    chain = [(i, i + 1) for i in range(n - 1)]
+    g = Graph.from_pairs(spark, chain, directed=False, n=n)
+    for coarsen_after, cap in ((1, 2), (2, 3)):
+        res = connected_components(
+            g, coarsen_after=coarsen_after, max_iterations=cap
+        )
+        assert res.iterations <= cap, res.history
+        labels = {r["id"]: r["label"] for r in res.labels.collect()}
+        assert len(labels) == n
+        assert all(label <= v for v, label in labels.items())

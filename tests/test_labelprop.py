@@ -115,3 +115,31 @@ def test_checkpoint_resume_plp(spark, tmp_path):
     resumed = label_propagation(g, checkpointer=ck2, resume=True)
     got = {r["id"]: r["label"] for r in resumed.labels.collect()}
     assert got == straight
+
+
+def test_src_partitioned_regime_matches_broadcast(spark, monkeypatch):
+    """Graphs above PLP_BROADCAST_N vertices run src-partitioned sweeps
+    (no label broadcast, neighbor expansion on src). Forcing that regime
+    on small graphs must give the broadcast run's labels and the
+    oracle's, both converged and in fixed-sweep mode."""
+    import networkit_spark.operators.labelprop as plp
+    from networkit_spark.operators.labelprop import label_propagation_fixed
+
+    def labels_of(df):
+        return {r["id"]: r["label"] for r in df.collect()}
+
+    cliques, _ = planted_cliques(100, 20)
+    gc = Graph.from_pairs(spark, cliques, directed=False, n=100)
+    er = erdos_renyi(60, 0.08, seed=4)
+    ge = Graph.from_pairs(spark, er, directed=False, n=60)
+
+    broadcast = (labels_of(label_propagation(gc).labels),
+                 labels_of(label_propagation_fixed(ge, 3)))
+    monkeypatch.setattr(plp, "PLP_BROADCAST_N", 0)
+    src_part = (labels_of(label_propagation(gc).labels),
+                labels_of(label_propagation_fixed(ge, 3)))
+
+    assert src_part == broadcast
+    assert src_part[0] == plp_oracle(100, [(u, v, 1.0) for u, v in cliques])
+    assert src_part[1] == plp_oracle(60, [(u, v, 1.0) for u, v in er],
+                                     max_iterations=3)

@@ -87,6 +87,25 @@ def test_no_unbounded_global_windows():
     assert not offenders, f"unjustified global windows: {offenders}"
 
 
+# ---------------------------------------------- environment-read source lock
+def test_only_session_reads_environment():
+    """Engine behavior is set through function arguments, not environment
+    variables: only session.py (deployment settings: cores, driver heap)
+    may read `os.environ` / `os.getenv`."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "networkit_spark"
+    offenders = []
+    for path in pkg.rglob("*.py"):
+        if path.relative_to(pkg).as_posix() == "session.py":
+            continue
+        for i, line in enumerate(path.read_text().splitlines()):
+            if re.search(r"\benviron\b|\bgetenv\b", line):
+                offenders.append(f"{path.relative_to(pkg)}:{i + 1}: {line.strip()}")
+    assert not offenders, f"environment reads outside session.py: {offenders}"
+
+
 def test_two_phase_rank_matches_global_window(spark):
     from pyspark.sql import Window
 

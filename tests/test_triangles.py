@@ -106,9 +106,9 @@ def test_extract_largest_component(spark):
     assert sorted(r["id"] for r in compacted.vertices().collect()) == list(range(7))
 
 
-def test_partition_vs_join_methods_identical(spark):
-    """The partition-local color-triple plan (r5 default) must agree with
-    the join plan exactly — enumeration, corner counts, edge scores,
+def test_partition_matches_oracle(spark):
+    """The partition-local color-triple plan must match the brute-force
+    oracle exactly — canonical enumeration, corner counts, edge scores,
     totals — across several p values including p larger than the vertex
     color diversity."""
     from networkit_spark.operators.triangles import (
@@ -116,22 +116,18 @@ def test_partition_vs_join_methods_identical(spark):
 
     edges = erdos_renyi(60, 0.15, seed=11)
     g = Graph.from_pairs(spark, edges, directed=False, n=60)
-    tj = sorted(map(tuple, triangles(g, method="join").collect()))
+    oracle = triangles_oracle(60, edges)
+    want = oracle["triangles"]
+    assert want  # the fixture must actually contain triangles
     for p in (3, 4, 7):
-        tp = sorted(map(tuple, triangles(g, method="partition", p=p).collect()))
-        assert tp == tj, p
-    cj = {r["id"]: r["triangles"]
-          for r in triangle_counts(g, method="join").collect()}
-    cp = {r["id"]: r["triangles"]
-          for r in triangle_counts(g, method="partition").collect()}
-    assert cj == cp
-    ej = {(r["u"], r["v"]): r["triangles"]
-          for r in triangle_edge_scores(g, method="join").collect()}
+        tp = sorted(map(tuple, triangles(g, p=p).collect()))
+        assert tp == want, p
+    cp = {r["id"]: r["triangles"] for r in triangle_counts(g).collect()}
+    assert cp == oracle["per_node"]
     ep = {(r["u"], r["v"]): r["triangles"]
-          for r in triangle_edge_scores(g, method="partition").collect()}
-    assert ej == ep
-    assert (total_triangles(g, method="join")
-            == total_triangles(g, method="partition") == len(tj))
+          for r in triangle_edge_scores(g).collect()}
+    assert ep == oracle["per_edge"]
+    assert total_triangles(g) == oracle["total"] == len(want)
 
 
 def test_partition_kernel_chunking(monkeypatch):
