@@ -80,7 +80,6 @@ def connected_components(
     resume: bool = False,
     max_iterations: int | None = None,
     initial_labels: DataFrame | None = None,
-    coarsen_after: int | None = None,
 ) -> ComponentsResult:
     """initial_labels (id, label): warm start — valid whenever every given
     label is the id of SOME vertex in the same component (e.g. the fixed
@@ -94,20 +93,8 @@ def connected_components(
     the fixed point (min id per component) is unchanged because the
     label-of-label is always an id inside the same component.
 
-    coarsen_after=k: if not converged after k supersteps, CONTRACT the
-    graph by the current labels (one join + distinct — every label is a
-    real vertex id of its group, so labels double as coarse vertex ids),
-    recurse on the strictly smaller coarse graph, and prolong the coarse
-    roots back through the current label table. This is the reference's
-    ParallelConnectedComponents move (ParallelConnectedComponents.cpp:
-    65-76: coarsen after 8 rounds and recurse); the fixed point (min id
-    per component) is unchanged because coarse hash-min computes the min
-    LABEL per coarse component = min fine id per fine component.
-    High-diameter tails then iterate on the contracted remnant instead
-    of dragging the full edge table through every superstep. Checkpoint
-    `resume` covers the supersteps before the contraction; the recursive
-    levels rerun from their (cheap, already-contracted) seeds.
-    max_iterations caps the supersteps summed over all levels."""
+    max_iterations caps the supersteps; the labels after the cap are the
+    current hash-min labels (each still an id of its own component)."""
     spark = graph.edges.sparkSession
     ckpt = checkpointer or Checkpointer(spark, None, algorithm="connected_components")
     sym = graph.symmetrized_edges().select("src", "dst")
@@ -134,10 +121,7 @@ def connected_components(
             history = [m["metrics"] for m in ckpt.history()]
 
     n_changed = -1
-    local_steps = 0
     while n_changed != 0 and (max_iterations is None or iterations < max_iterations):
-        if coarsen_after is not None and local_steps >= coarsen_after:
-            break
         frontier = state.filter("changed").select("id", "label")
         msgs = (
             frontier.join(sym, frontier.id == sym.src)
@@ -172,55 +156,10 @@ def connected_components(
             )
         )
         iterations += 1
-        local_steps += 1
         snap = ckpt.save(merged, iterations, None)
         n_changed = snap.filter("changed").count()
         history.append({"iteration": iterations, "changed": int(n_changed)})
         state = snap
-
-    if n_changed != 0 and coarsen_after is not None and local_steps >= coarsen_after:
-        cur = truncate(state.select("id", "label"))
-        n_fine = cur.count()
-        ls = cur.select(F.col("id").alias("src"), F.col("label").alias("ls"))
-        ld = cur.select(F.col("id").alias("dst"), F.col("label").alias("ld"))
-        coarse_edges = (
-            sym.join(ls, "src")
-            .join(ld, "dst")
-            .select(F.col("ls").alias("src"), F.col("ld").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-            .withColumn("weight", F.lit(1.0))
-        )
-        coarse_n = cur.select("label").distinct().count()
-        sym.unpersist()
-        coarse = Graph.from_edges(
-            coarse_edges, directed=False, already_symmetrized=True
-        )
-        sub = connected_components(
-            coarse,
-            # guard: recurse with coarsening only while the graph shrinks
-            coarsen_after=coarsen_after if coarse_n < n_fine else None,
-            max_iterations=(None if max_iterations is None
-                            else max(0, max_iterations - iterations)),
-        )
-        roots = sub.labels.select(
-            F.col("id").alias("label"), F.col("label").alias("root")
-        )
-        final = cur.join(roots, "label", "left").select(
-            "id", F.coalesce("root", F.col("label")).alias("label")
-        )
-        history.append({
-            "iteration": iterations,
-            "coarsened_to": int(coarse_n),
-            "coarse_iterations": sub.iterations,
-        })
-        # NB: `cur` stays persisted — the returned labels read through it
-        # (it is a localCheckpoint; unpersisting would drop its blocks).
-        return ComponentsResult(
-            labels=final,
-            iterations=iterations + sub.iterations,
-            history=history,
-        )
 
     sym.unpersist()
     return ComponentsResult(
@@ -283,8 +222,6 @@ def connected_components_twophase(
     Reference analog: ParallelConnectedComponents.cpp:65-76 coarsens
     after 8 iterations — the same contraction idea, made the whole
     algorithm."""
-    from networkit_spark.plans.iterative import truncate
-
     und = (
         graph.symmetrized_edges()
         .filter(F.col("src") != F.col("dst"))

@@ -22,10 +22,10 @@ Two modes:
   rule: "driver-resumable from Iceberg-snapshot checkpoints carrying
   per-partition lineage and iteration metrics").
 
-Per-partition lineage: durable snapshots record, per written file, the
-parquet row count as reported by the committed files — enough to audit
-which partitions contributed to an iteration and to verify a resumed run
-reads exactly what the crashed run wrote.
+Per-partition lineage: durable snapshots record, per committed parquet
+file, its name and size in bytes (`files` in `_meta.json`) — enough to
+audit which partitions contributed to an iteration. Row counts per file
+are not recorded.
 """
 
 from __future__ import annotations

@@ -146,8 +146,7 @@ def main():
 
     graph_queries = (
         "pagerank_prepare", "pagerank_prepare_bucketed", "bucketed_ingest",
-        "pagerank_5iter", "cc_converge", "cc_hashmin_coarsen", "plp_2iter",
-        "triangle_total",
+        "pagerank_5iter", "cc_converge", "plp_2iter", "triangle_total",
     )
     if wanted(*graph_queries):
         edges = spark.read.parquet(edges_path).persist()
@@ -192,8 +191,7 @@ def main():
                 )
             prep.unpersist()
 
-        if wanted("cc_converge", "cc_hashmin_coarsen", "plp_2iter",
-                  "triangle_total"):
+        if wanted("cc_converge", "plp_2iter", "triangle_total"):
             und = (
                 edges.select(F.least("src", "dst").alias("src"),
                              F.greatest("src", "dst").alias("dst"))
@@ -203,14 +201,6 @@ def main():
             g_und = Graph.from_edges(und, directed=False, num_partitions=128)
             timed("cc_converge",
                   lambda: force(connected_components_twophase(g_und).labels))
-            # A/B (VERDICT r4 #3): hash-min with the reference's
-            # coarsen-after-k recursion vs the two-phase star default.
-            if wanted("cc_hashmin_coarsen"):
-                from networkit_spark.operators.components import (
-                    connected_components)
-                timed("cc_hashmin_coarsen",
-                      lambda: force(
-                          connected_components(g_und, coarsen_after=4).labels))
             timed("plp_2iter",
                   lambda: force(label_propagation_fixed(g_und, n_iter=2)))
             timed("triangle_total", lambda: triangles(g_und).count())

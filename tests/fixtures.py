@@ -54,3 +54,15 @@ def erdos_renyi(n: int, p: float, seed: int = 42):
 
     rng = random.Random(seed)
     return [(u, v) for u in range(n) for v in range(u + 1, n) if rng.random() < p]
+
+
+# Zachary karate club: 34 nodes, 78 undirected edges, unweighted — the same
+# graph as the reference's input/karate.graph, taken from networkx so the
+# tests need no file outside the repository.
+KARATE_N = 34
+
+
+def karate_edges():
+    import networkx
+
+    return list(networkx.karate_club_graph().edges())

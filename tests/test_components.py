@@ -175,44 +175,28 @@ def test_twophase_directed_and_isolated(spark):
     assert labels == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5}
 
 
-def test_coarsen_after_matches_plain(spark):
-    """coarsen_after (ParallelConnectedComponents.cpp:65-76 analog) must
-    reach the same min-id fixed point as the plain loop — on the fixture,
-    an ER graph, and a chain that actually triggers ≥1 contraction."""
-    g = Graph.from_pairs(spark, F1_EDGES, directed=False, n=F1_N)
-    oracle = components_oracle(F1_N, F1_EDGES)
-    res = connected_components(g, coarsen_after=2)
-    labels = {r["id"]: r["label"] for r in res.labels.collect()}
-    assert labels == oracle
+def _path(spark, n):
+    return Graph.from_pairs(
+        spark, [(i, i + 1) for i in range(n - 1)], directed=False, n=n
+    )
 
-    edges = erdos_renyi(80, 0.05, seed=13)
-    ge = Graph.from_pairs(spark, edges, directed=False, n=80)
-    want = components_oracle(80, edges)
-    got = {r["id"]: r["label"]
-           for r in connected_components(ge, coarsen_after=1).labels.collect()}
-    assert got == want
 
-    n = 120
-    chain = [(i, i + 1) for i in range(n - 1)]
-    gc = Graph.from_pairs(spark, chain, directed=False, n=n)
-    res = connected_components(gc, coarsen_after=2)
-    labels = {r["id"]: r["label"] for r in res.labels.collect()}
+def test_cc_shortcut_fewer_supersteps_on_chain(spark):
+    """Path graph P_65: plain hash-min would need ~diameter (about 64)
+    supersteps; pointer doubling needs O(log)."""
+    fast = connected_components(_path(spark, 65))
+    assert fast.number_of_components() == 1
+    labels = {r["id"]: r["label"] for r in fast.labels.collect()}
     assert set(labels.values()) == {0}
-    assert any("coarsened_to" in h for h in res.history), res.history
+    assert fast.iterations <= 10
 
 
-def test_coarsen_after_respects_max_iterations(spark):
-    """max_iterations caps the supersteps summed over every coarsening
-    level: on P_65 the contracted levels must stop at the remaining
-    budget instead of iterating on with the full cap each."""
-    n = 65
-    chain = [(i, i + 1) for i in range(n - 1)]
-    g = Graph.from_pairs(spark, chain, directed=False, n=n)
-    for coarsen_after, cap in ((1, 2), (2, 3)):
-        res = connected_components(
-            g, coarsen_after=coarsen_after, max_iterations=cap
-        )
-        assert res.iterations <= cap, res.history
-        labels = {r["id"]: r["label"] for r in res.labels.collect()}
-        assert len(labels) == n
-        assert all(label <= v for v, label in labels.items())
+def test_max_iterations_caps_supersteps(spark):
+    """max_iterations stops hash-min early (queries.py relies on it via
+    CC_ITERS): every vertex keeps a label that is an id no larger than
+    its own."""
+    res = connected_components(_path(spark, 65), max_iterations=2)
+    assert res.iterations == 2, res.history
+    labels = {r["id"]: r["label"] for r in res.labels.collect()}
+    assert set(labels) == set(range(65))
+    assert all(label <= v for v, label in labels.items())

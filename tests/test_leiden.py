@@ -14,9 +14,7 @@ from networkit_spark.operators.quality import (
     is_proper_clustering,
     modularity,
 )
-from tests.fixtures import erdos_renyi, planted_cliques
-
-KARATE = "/root/reference/input/karate.graph"
+from tests.fixtures import KARATE_N, erdos_renyi, karate_edges, planted_cliques
 
 
 def _communities_connected(spark, g: Graph, labels) -> bool:
@@ -59,9 +57,7 @@ def test_leiden_planted_cliques_both_paths(spark):
 
 
 def test_leiden_karate(spark):
-    from networkit_spark.sources.edgelist import read_metis
-
-    g = read_metis(spark, KARATE)
+    g = Graph.from_pairs(spark, karate_edges(), directed=False, n=KARATE_N)
     res = leiden(g)
     assert is_proper_clustering(g, res.labels)
     q = modularity(g, res.labels)

@@ -18,9 +18,7 @@ from networkit_spark.operators.quality import (
     is_proper_clustering,
     modularity,
 )
-from tests.fixtures import erdos_renyi, planted_cliques
-
-KARATE = "/root/reference/input/karate.graph"
+from tests.fixtures import KARATE_N, erdos_renyi, karate_edges, planted_cliques
 
 
 # ---------------------------------------------------------------- coarsening
@@ -148,9 +146,7 @@ def test_plm_labels_partition_count_invariant(spark):
 def test_plm_karate_quality(spark):
     """Known Louvain territory: Zachary karate club optimum Q ≈ 0.4198;
     any reasonable Louvain lands ≥ 0.38 with a handful of communities."""
-    from networkit_spark.sources.edgelist import read_metis
-
-    g = read_metis(spark, KARATE)
+    g = Graph.from_pairs(spark, karate_edges(), directed=False, n=KARATE_N)
     res = plm(g)
     assert is_proper_clustering(g, res.labels)
     q = modularity(g, res.labels)
